@@ -1609,9 +1609,9 @@ object SparkEntry {
     }),
     // ---- ROUTING: bounded-hop single-source shortest path over a synthetic
     //      road graph (Bellman-Ford rounds = Pregel shape: one frontier⋈edges
-    //      equi-join + one hash min-aggregate per round, localCheckpoint
-    //      lineage truncation, early exit at the fixpoint). Pure int64 adds
-    //      and mins — the DuckDB twin is H chained min-relaxation CTEs.
+    //      equi-join + one hash min-aggregate per plans.Fixpoint round).
+    //      Pure int64 adds and mins — the DuckDB twin is H chained
+    //      min-relaxation CTEs.
     "q83_sssp" -> ((s, dir) => {
       val k = col("o_orderkey")
       // dst mixes in (k div 500) so parallel orders on the same src residue
@@ -1638,9 +1638,8 @@ object SparkEntry {
     }),
     // ---- PAGERANK: bounded-iteration link centrality in EXACT int64
     //      fixed-point (SCALE 10^12, damping 85/100, integer `div` at both
-    //      the per-edge contribution and the damped sum) — the same Pregel
-    //      discipline as q83: one rank⋈edges equi-join + one hash
-    //      sum-aggregate per round, localCheckpoint lineage truncation.
+    //      the per-edge contribution and the damped sum) — one rank⋈edges
+    //      equi-join + one hash sum-aggregate per plans.Fixpoint round.
     //      6 rounds; the DuckDB twin is 6 chained CTEs replaying the rule.
     "q86_pagerank" -> ((s, dir) => {
       val k = col("o_orderkey")
@@ -4212,25 +4211,6 @@ object SparkEntry {
     "q9u_st_dbscan" ->
       s"""$stDbscanCteSql
          |SELECT id, cluster FROM lbl ORDER BY id""".stripMargin,
-    "qae_visit_conc" ->
-      s"""WITH f AS (SELECT user_id AS ent,
-         |  (${Derive.lonSql("(user_id % 13)")}
-         |    + ((user_id * 31 + ((epoch_us(ts) - 1704067200000000)
-         |        // 259200000000) * 7) * 48271) % 600001 - 300000
-         |    + (event_id * 7919) % 200001 - 100000 + 180000000)
-         |      // 400000 AS cx,
-         |  (${Derive.latSql("(user_id % 13)")}
-         |    + ((user_id * 17 + ((epoch_us(ts) - 1704067200000000)
-         |        // 259200000000) * 11) * 16807) % 600001 - 300000
-         |    + ((event_id + 3) * 104729) % 200001 - 100000 + 90000000)
-         |      // 400000 AS cy
-         |  FROM events),
-         |c AS (SELECT ent, cx, cy, count(*) AS n FROM f GROUP BY 1, 2, 3)
-         |SELECT ent AS entity, CAST(sum(n) AS BIGINT) AS n_fixes,
-         |  CAST(count(*) AS BIGINT) AS n_cells,
-         |  CAST(sum(n * n) AS BIGINT) AS coll,
-         |  CAST(max(n) AS BIGINT) AS max_cell_n
-         |FROM c GROUP BY ent ORDER BY entity""".stripMargin,
     "qae_visit_conc" ->
       s"""WITH f AS (SELECT user_id AS ent,
          |  (${Derive.lonSql("(user_id % 13)")}

@@ -1,8 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (tools/compare.py). Exits 1,
+  * naming the failed queries, if any query threw. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
@@ -21,12 +22,29 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val failed = try dump(spark, sfDir, outDir, only) finally spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Writes each selected query's result to `<outDir>/<name>.parquet` and
+    * every oracle twin to `<outDir>/oracle_sql.json`; a query that throws
+    * is logged and skipped so the rest still dump. Returns the names of
+    * the queries that threw.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           only: String => Boolean): Seq[String] = {
     new java.io.File(outDir).mkdirs()
+    val failed = Seq.newBuilder[String]
     SparkEntry.queries.filter(kv => only(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name.parquet")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name
       }
       // same isolation as Bench: a full GC lets the ContextCleaner drop
       // finished broadcasts / localCheckpoint blocks between queries —
@@ -53,6 +71,6 @@ object Verify {
       .flatMap { case (k, v) => Seq(k -> v, s"$k.parquet" -> v) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    failed.result()
   }
 }

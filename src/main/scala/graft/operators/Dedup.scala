@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
+import graft.plans.Fixpoint
 
 /** Deduplication operators for large-scale training-data pipelines — the ops
   * a 100 TB text corpus needs before training (exact dedup, MinHash-LSH,
@@ -314,36 +315,20 @@ object Dedup {
     * per doc that appears in ≥1 pair (self-paired isolated docs label
     * themselves).
     *
-    * Planner note: localCheckpoint PRESERVES the origin plan's ESTIMATED
-    * stats, and iterative rounds join the carried table against itself —
-    * so sizeInBytes estimates compound per round. Seeded by an input whose
-    * pipeline already carries a large estimate (the DBSCAN candidate join
-    * at bench SF), planning itself became BigInteger arithmetic on
-    * ever-growing numbers: measured q7m wedged > 25 min inside
-    * SizeInBytesOnlyStatsPlanVisitor (jstack: Toom-Cook multiplies) while
-    * every executor sat idle. `rebase` resets the stats of the already-
-    * materialized checkpoint blocks through an RDD round-trip — bounded
-    * planner cost, identical rows; join-strategy quality is unaffected
-    * because AQE re-plans from RUNTIME sizes. The round-trip costs one
-    * narrow job, so it runs ONLY when the estimate has bloated past 256
-    * bits — probing stats is cheap precisely because the gate keeps them
-    * small.
+    * Rounds run under [[Fixpoint]], which also holds the
+    * planner-stats guard this operator's DBSCAN callers first needed (q7m).
     */
-  private def rebase(df: DataFrame): DataFrame =
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes.bitLength <= 256) df
-    else df.sparkSession.createDataFrame(df.rdd, df.schema)
-
   def dupClusters(pairs: DataFrame, maxRounds: Int = 30): DataFrame = {
     // node universe (labels owed to every doc in ≥1 pair, incl. self-pairs)
     // and the canonical a<b edge set — both materialized ONCE: `pairs` is
     // typically a whole LSH pipeline
-    val nodes = rebase(pairs.select(col("id_a").as("id"))
+    val nodes = Fixpoint.checkpoint(pairs.select(col("id_a").as("id"))
       .union(pairs.select(col("id_b").as("id")))
-      .distinct().localCheckpoint())
-    var edges = rebase(pairs
+      .distinct())
+    val pairEdges = pairs
       .select(least(col("id_a"), col("id_b")).as("a"),
         greatest(col("id_a"), col("id_b")).as("b"))
-      .where(col("a") =!= col("b")).distinct().localCheckpoint())
+      .where(col("a") =!= col("b")).distinct()
     def pair(x: Column, y: Column) =
       Seq(least(x, y).as("a"), greatest(x, y).as("b"))
     // one star step over the current edge set: for each u with closed-
@@ -363,18 +348,11 @@ object Dedup {
           .select(pair(col("u"), col("m")): _*))
       out.distinct()
     }
-    var round = 0
-    var converged = false
-    while (round < maxRounds && !converged) {
-      val next = rebase(star(star(edges, large = true), large = false)
-        .localCheckpoint())
-      // fixpoint ⟺ the edge SET is unchanged (then every edge is already
-      // a star edge rooted at its component min): two anti-join probes
-      // over the checkpointed tables
-      converged = next.except(edges).union(edges.except(next))
-        .limit(1).count() == 0
-      edges = next
-      round += 1
+    // fixpoint ⟺ the edge SET is unchanged (then every edge is already a
+    // star edge rooted at its component min)
+    val (edges, converged) = Fixpoint.iterate(pairEdges, maxRounds)(
+        e => star(star(e, large = true), large = false)) { (next, prev) =>
+      next.except(prev).union(prev.except(next))
     }
     require(converged,
       s"dupClusters did not converge in $maxRounds star rounds — " +

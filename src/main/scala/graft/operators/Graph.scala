@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.Fixpoint
 
 /** Triangle counting over an undirected graph — the clustering-coefficient
   * / community-density primitive (road-network mesh density, co-occurrence
@@ -134,14 +135,13 @@ object Graph {
     * irrelevant to ranking order at SCALE = 10^12). Σ stays < 2^63 for
     * |V| ≤ ~9 M at this scale; lower SCALE for bigger graphs.
     *
-    * Plan (100 TB posture): the same Pregel discipline as
-    * [[Routing.shortestPaths]] — per round ONE equi-join of the rank table
-    * against the out-degree-annotated edges on src and ONE hash
-    * sum-aggregate, then a left join back onto V for in-degree-0 nodes
-    * (BASE only); `localCheckpoint` truncates the iterative lineage each
-    * round. Edges are scanned once per round, never collected, never
-    * broadcast (rank and edge tables shuffle-join on the same key, and AQE
-    * may still choose broadcast when a side is genuinely small).
+    * Plan (100 TB posture): `iters` [[Fixpoint.rounds]] — per round ONE
+    * equi-join of the rank table against the out-degree-annotated edges on
+    * src and ONE hash sum-aggregate, then a left join back onto V for
+    * in-degree-0 nodes (BASE only). Edges are scanned once per round,
+    * never collected, never broadcast (rank and edge tables shuffle-join
+    * on the same key, and AQE may still choose broadcast when a side is
+    * genuinely small).
     */
   def pageRank(edges: DataFrame, u: Column, v: Column, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 64, "iters must be in [1, 64]")
@@ -157,18 +157,15 @@ object Graph {
     val outDeg = e.groupBy("_src").agg(count(lit(1)).as("_out"))
     val eAnn = e.join(outDeg, "_src").localCheckpoint() // derived ONCE
 
-    var rank = nodes.withColumn("r", lit(SCALE)).localCheckpoint()
-    (1 to iters).foreach { _ =>
+    Fixpoint.rounds(nodes.withColumn("r", lit(SCALE)), iters) { rank =>
       val contrib = rank.join(eAnn, col("node") === col("_src"))
         .select(col("_dst").as("node"),
           expr("r div _out").as("c")) // exact int64 division, not `/`
         .groupBy("node").agg(sum("c").as("s"))
-      rank = nodes.join(contrib, Seq("node"), "left")
+      nodes.join(contrib, Seq("node"), "left")
         .select(col("node"),
           expr(s"$BASE + (85 * coalesce(s, 0)) div 100").as("r"))
-        .localCheckpoint()
     }
-    rank
   }
 
   /** k-CORE decomposition — the maximal subgraph in which every vertex has
@@ -185,44 +182,33 @@ object Graph {
     *
     * Plan (100 TB posture): per round ONE degree hash-aggregate over the
     * live edge set + TWO anti-joins against the (small) peeled-vertex set —
-    * AQE broadcasts it; no window, no sort, no driver-side graph.
-    * `localCheckpoint` truncates the iterative lineage (the q83/q86 Pregel
-    * discipline). Round count = peeling DEPTH, not vertex count: one round
-    * per onion layer — O(log n) on cohesive graphs, but an L-vertex
-    * dangling chain peels from the ends at 2 vertices/round (the known
-    * parallel-peel worst case), so `maxRounds` is a contract:
-    * non-convergence RAISES (the dupClusters discipline) rather than
-    * returning a silently-unpeeled core.
+    * AQE broadcasts it; no window, no sort, no driver-side graph. Rounds
+    * run under [[Fixpoint.iterate]]. Round count = peeling DEPTH + 1, not
+    * vertex count: one round per onion layer, plus the round that peels
+    * nothing — O(log n) on cohesive graphs, but an
+    * L-vertex dangling chain peels from the ends at 2 vertices/round (the
+    * known parallel-peel worst case), so `maxRounds` is a contract:
+    * non-convergence RAISES rather than returning a silently-unpeeled core.
     */
   def kCore(edges: DataFrame, u: Column, v: Column, k: Int,
             maxRounds: Int = 32): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(maxRounds >= 1 && maxRounds <= 64, "maxRounds out of range")
-    var live = edges.select(
+    def degrees(e: DataFrame): DataFrame =
+      e.select(col("a").as("n")).union(e.select(col("b").as("n")))
+        .groupBy("n").agg(count(lit(1)).as("d"))
+    val simple = edges.select(
         least(u.cast("long"), v.cast("long")).as("a"),
         greatest(u.cast("long"), v.cast("long")).as("b"))
       .where(col("a") =!= col("b")).distinct()
-      .localCheckpoint()
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
-      val deg = live.select(col("a").as("n"))
-        .union(live.select(col("b").as("n")))
-        .groupBy("n").agg(count(lit(1)).as("d"))
-      val peel = deg.where(col("d") < k).select("n").localCheckpoint()
-      if (peel.isEmpty) converged = true
-      else {
-        live = live
-          .join(peel.select(col("n").as("a")), Seq("a"), "left_anti")
-          .join(peel.select(col("n").as("b")), Seq("b"), "left_anti")
-          .localCheckpoint()
-        round += 1
-      }
-    }
+    val (live, converged) = Fixpoint.iterate(simple, maxRounds) { live =>
+      val peel = degrees(live).where(col("d") < k).select("n")
+      live.join(peel.select(col("n").as("a")), Seq("a"), "left_anti")
+        .join(peel.select(col("n").as("b")), Seq("b"), "left_anti")
+    } { (next, prev) => prev.join(next, Seq("a", "b"), "left_anti") }
     require(converged, s"k-core peel did not converge in $maxRounds rounds " +
       "— raise maxRounds (long dangling chains peel at 2 vertices/round)")
-    live.select(col("a").as("n")).union(live.select(col("b").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("core_deg"))
+    degrees(live).withColumnRenamed("d", "core_deg")
   }
 
   /** SYNCHRONOUS LABEL PROPAGATION communities [Raghavan 2007,
@@ -245,10 +231,9 @@ object Graph {
     * self-labeled rows if the use case needs them).
     *
     * Plan (100 TB posture): per round — ONE labels⋈edges equi-join, one
-    * (node, label) hash count, one min(struct) argmin hash aggregate; the
-    * [[graft.operators.Routing.shortestPaths]] Pregel discipline
-    * (localCheckpoint per round bounds lineage, K ≤ 8 bounds cost). No
-    * window sort, no driver state.
+    * (node, label) hash count, one min(struct) argmin hash aggregate, as
+    * `rounds` [[Fixpoint.rounds]] (K ≤ 8 bounds cost). No window sort, no
+    * driver state.
     */
   def labelPropagation(edges: DataFrame, u: Column, v: Column,
                        rounds: Int): DataFrame = {
@@ -257,17 +242,14 @@ object Graph {
       .where(col("a") =!= col("b"))
     val und = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
       .distinct().localCheckpoint()
-    var lbl = und.select(col("a").as("node")).distinct()
-      .withColumn("lbl", col("node")).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      lbl = und
-        .join(lbl.select(col("node").as("b"), col("lbl").as("nl")), "b")
+    val init = und.select(col("a").as("node")).distinct()
+      .withColumn("lbl", col("node"))
+    Fixpoint.rounds(init, rounds) { lbl =>
+      und.join(lbl.select(col("node").as("b"), col("lbl").as("nl")), "b")
         .groupBy(col("a").as("node"), col("nl")).agg(count(lit(1)).as("cnt"))
         .groupBy("node")
         .agg(min(struct((-col("cnt")).as("nc"), col("nl").as("l"))).as("m"))
         .select(col("node"), col("m.l").as("lbl"))
-        .localCheckpoint()
     }
-    lbl
   }
 }

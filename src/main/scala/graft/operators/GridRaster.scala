@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.Fixpoint
 
 /** Vector→raster grid analytics: build regular-grid rasters FROM point
   * tables — the inverse direction of the zonal-statistics / mosaic ops in
@@ -379,8 +380,8 @@ object GridRaster {
     * edges come from the polygonize right/up equi-join (each edge once,
     * then both directions — no dedup); the BFS is literally
     * [[Routing.shortestPaths]] on packed cell keys (one frontier⋈edges
-    * join + one min hash-aggregate per round, localCheckpoint truncation,
-    * early exit at the fixpoint) — operator composition, not a new engine.
+    * join + one min hash-aggregate per round) — operator composition, not
+    * a new engine.
     */
   def isochrone(points: DataFrame, lonCol: Column, latCol: Column,
                 cellMicro: Long, sources: Seq[(Long, Long)], maxSteps: Int)
@@ -557,11 +558,10 @@ object GridRaster {
     * a forest and accumulation is well-defined.
     *
     * acc(c) = 1 + Σ_{u : flow(u)=c} acc(u), computed by bounded Jacobi
-    * rounds under the [[Routing.shortestPaths]] Pregel discipline: one
-    * frontier⋈edges equi-join + one hash sum-aggregate per round;
-    * acc_k(c) = 1 + (upstream cells within k hops) is monotone
-    * non-decreasing and fixes at the in-tree depth, `require`d to
-    * converge within `maxIters`.
+    * [[Fixpoint.iterate]] rounds: one frontier⋈edges equi-join + one hash
+    * sum-aggregate per round; acc_k(c) = 1 + (upstream cells within k
+    * hops) is monotone non-decreasing and fixes at the in-tree depth,
+    * `require`d to converge within `maxIters`.
     *
     * Output: (cx, cy, n, tcx, tcy, is_pit, acc) — flow target coalesced
     * to (-1, -1) for pits so the driver surface stays null-free.
@@ -613,20 +613,16 @@ object GridRaster {
       .select((col("cx") * K + col("cy")).as("s"),
         (col("tcx") * K + col("tcy")).as("d"))
       .localCheckpoint()
-    var acc = raster.select((col("cx") * K + col("cy")).as("node"))
-      .withColumn("acc", lit(1L)).localCheckpoint()
-    var round = 0
-    var converged = false
-    while (round < maxIters && !converged) {
+    val init = raster.select((col("cx") * K + col("cy")).as("node"))
+      .withColumn("acc", lit(1L))
+    val (acc, converged) = Fixpoint.iterate(init, maxIters) { acc =>
       val inflow = acc.join(edges, col("node") === col("s"))
         .groupBy(col("d").as("node")).agg(sum("acc").as("_in"))
-      val next = acc.select("node").join(inflow, Seq("node"), "left")
+      acc.select("node").join(inflow, Seq("node"), "left")
         .select(col("node"), (lit(1L) + coalesce(col("_in"), lit(0L))).as("acc"))
-        .localCheckpoint()
-      converged = next.join(acc.withColumnRenamed("acc", "_old"), Seq("node"))
-        .where(col("acc") =!= col("_old")).limit(1).count() == 0
-      acc = next
-      round += 1
+    } { (next, prev) =>
+      next.join(prev.withColumnRenamed("acc", "_old"), Seq("node"))
+        .where(col("acc") =!= col("_old"))
     }
     require(converged,
       s"flow accumulation did not converge within $maxIters rounds")

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.Fixpoint
 
 /** Bounded-hop single-source shortest path over the (snapped) road
   * network — the routing/reachability verb downstream of map matching
@@ -24,16 +25,22 @@ import org.apache.spark.sql.functions._
   * Plan (100 TB posture): the Pregel/Bellman-Ford shape — per round ONE
   * equi-join of the frontier dist table against the edge table on src
   * (shuffle ∝ out-degree of reached nodes, AQE-skew-safe) and ONE hash
-  * min-aggregate; `localCheckpoint` truncates the iterative lineage each
-  * round (the dupClusters discipline — un-truncated, round k's plan
-  * re-executes all k−1 prior joins). Early exit when a round changes no
-  * dist: dist_k = dist_{k-1} is a fixpoint of relaxation, so all later
-  * rounds are provably identical — the probe is a filter over the two
-  * checkpointed tables, not an extra shuffle. The edge table is scanned
-  * once per round and never collected; nothing driver-sized anywhere.
+  * min-aggregate, run as at most H [[Fixpoint.iterate]] rounds. Early
+  * exit when a round changes no dist: dist_k = dist_{k-1} is a fixpoint
+  * of relaxation, so all later rounds are provably identical; a run that
+  * hits H returns dist_H, which is the contract, so the `converged` flag
+  * is not consulted. The edge table is scanned once per round and never
+  * collected; nothing driver-sized anywhere.
   * Negative-cycle hazards don't exist (w ≥ 0 enforced, hops bounded).
   */
 object Routing {
+
+  /** (_src, _dst, _w ≥ 0) as longs — derived ONCE, not once per round. */
+  private def edgeTable(edges: DataFrame, src: Column, dst: Column,
+                        w: Column): DataFrame =
+    edges.select(src.cast("long").as("_src"),
+        dst.cast("long").as("_dst"), w.cast("long").as("_w"))
+      .where(col("_w") >= 0L).localCheckpoint()
 
   /** @param edges   (src, dst, w) directed weighted edge table
     * @param sources source node ids (dist 0), driver-side (a routing query
@@ -47,35 +54,18 @@ object Routing {
     require(sources.nonEmpty, "need at least one source node")
     val spark = edges.sparkSession
     import spark.implicits._
-
-    val e = edges.select(src.cast("long").as("_src"),
-        dst.cast("long").as("_dst"), w.cast("long").as("_w"))
-      .where(col("_w") >= 0L)
-      .localCheckpoint() // edge derivation runs ONCE, not once per round
-
-    var dist = sources.distinct.toDF("node")
-      .withColumn("dist", lit(0L))
-      .localCheckpoint()
-    var round = 0
-    var converged = false
-    while (round < maxHops && !converged) {
+    val e = edgeTable(edges, src, dst, w)
+    val init = sources.distinct.toDF("node").withColumn("dist", lit(0L))
+    Fixpoint.iterate(init, maxHops) { dist =>
       val relaxed = dist.join(e, col("node") === col("_src"))
         .select(col("_dst").as("node"), (col("dist") + col("_w")).as("dist"))
-      val next = dist.union(relaxed)
-        .groupBy("node").agg(min("dist").as("dist"))
-        .localCheckpoint()
-      // fixpoint probe: relaxation is monotone (dists only decrease, the
-      // reached set only grows), so "no row improved AND no row appeared"
-      // ⟺ next = dist ⟺ every later round returns the same table. A left
-      // join over the two checkpointed tables — no recompute.
-      converged = next.join(dist.withColumnRenamed("dist", "_old"),
-          Seq("node"), "left")
+      dist.union(relaxed).groupBy("node").agg(min("dist").as("dist"))
+    } { (next, prev) =>
+      // relaxation is monotone (dists only decrease, the reached set only
+      // grows), so "no row improved AND no row appeared" ⟺ next = prev
+      next.join(prev.withColumnRenamed("dist", "_old"), Seq("node"), "left")
         .where(col("_old").isNull || col("dist") < col("_old"))
-        .limit(1).count() == 0
-      dist = next
-      round += 1
-    }
-    dist
+    }._1
   }
 
   /** LABELED multi-source shortest paths — [[shortestPaths]] where every
@@ -99,36 +89,26 @@ object Routing {
     require(sources.nonEmpty, "need at least one (source, label)")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(src.cast("long").as("_src"),
-        dst.cast("long").as("_dst"), w.cast("long").as("_w"))
-      .where(col("_w") >= 0L)
-      .localCheckpoint()
+    val e = edgeTable(edges, src, dst, w)
     // duplicate source nodes collapse to their smallest label up front
-    var dist = sources.groupBy(_._1).map { case (n, ls) =>
+    val init = sources.groupBy(_._1).map { case (n, ls) =>
         (n, ls.map(_._2).min)
       }.toSeq.toDF("node", "lab")
       .select(col("node"), lit(0L).as("dist"), col("lab"))
-      .localCheckpoint()
-    var round = 0
-    var converged = false
-    while (round < maxHops && !converged) {
+    Fixpoint.iterate(init, maxHops) { dist =>
       val relaxed = dist.join(e, col("node") === col("_src"))
         .select(col("_dst").as("node"), (col("dist") + col("_w")).as("dist"),
           col("lab"))
-      val next = dist.union(relaxed)
+      dist.union(relaxed)
         .groupBy("node")
         .agg(graft.functions.ArgMinLongsAgg.argminLongs(
           struct(col("dist"), col("lab"))).as("_m"))
         .select(col("node"), col("_m.dist").as("dist"), col("_m.lab").as("lab"))
-        .localCheckpoint()
-      converged = next.join(dist.withColumnRenamed("dist", "_od")
+    } { (next, prev) =>
+      next.join(prev.withColumnRenamed("dist", "_od")
           .withColumnRenamed("lab", "_ol"), Seq("node"), "left")
         .where(col("_od").isNull || col("dist") < col("_od") ||
           (col("dist") === col("_od") && col("lab") < col("_ol")))
-        .limit(1).count() == 0
-      dist = next
-      round += 1
-    }
-    dist
+    }._1
   }
 }

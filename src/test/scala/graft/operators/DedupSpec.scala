@@ -115,6 +115,11 @@ class DedupSpec extends AnyFunSuite {
       Dedup.dupClusters(chain, maxRounds = 2).collect()
     }
     assert(e.getMessage.contains("converge"))
+    // an edge set that is already a star only needs the confirming round
+    val star = Seq((1L, 2L), (3L, 1L), (1L, 4L)).toDF("id_a", "id_b")
+    assert(Dedup.dupClusters(star, maxRounds = 1)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
   }
 
   test("cross-corpus LSH near-dup: batch x corpus pairs equal brute force, no self pairs") {

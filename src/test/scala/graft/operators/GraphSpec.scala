@@ -179,6 +179,9 @@ class GraphSpec extends AnyFunSuite {
     val path = (0L until 12L).map(i => (i, i + 1)) // needs 6 rounds
     val ex = intercept[IllegalArgumentException](runCore(path, 2, maxRounds = 3))
     assert(ex.getMessage.contains("did not converge"))
+    // 6 peels plus the round that peels nothing: 7 rounds fit, 6 do not
+    intercept[IllegalArgumentException](runCore(path, 2, maxRounds = 6))
+    assert(runCore(path, 2, maxRounds = 7) === Map.empty)
   }
 
   test("kCore brute parity on pseudo-random multigraphs across k") {

@@ -648,6 +648,20 @@ class GridRasterSpec extends AnyFunSuite {
     assert(got === bruteFlow(pts, g))
   }
 
+  test("flowAccumulation: raises when maxIters is below the chain depth + 1") {
+    val g = 1000000L
+    // values 5,4,3,2,1 along x: a 4-hop chain into the pit at (14, 10)
+    val pts = (0 until 5).flatMap { i =>
+      Seq.fill(5 - i)(((10L + i) * g - 180000000L + 1L, 10L * g - 90000000L + 1L))
+    }.toDF("x", "y")
+    def run(maxIters: Int) =
+      GridRaster.flowAccumulation(pts, col("x"), col("y"), g, maxIters)
+        .where(col("is_pit") === 1L).select("acc").as[Long].collect().toSeq
+    val ex = intercept[IllegalArgumentException](run(4))
+    assert(ex.getMessage.contains("did not converge"))
+    assert(run(5) === Seq(5L)) // 4 rounds that grow acc + the confirming one
+  }
+
   test("flowAccumulation: brute parity on a clustered scatter, mass conserved") {
     val rnd = new scala.util.Random(31)
     val centers = (0 until 5).map { _ =>
