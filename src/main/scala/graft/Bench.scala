@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.fixtures.Fixtures
 import graft.functions.GraftFunctions._
 import graft.operators.SpatialJoin
+import graft.queries.{Query, QueryRegistry}
 
 /** Shared bench kernels (BASELINE.md protocol: warm-up discarded, median of
   * >=3 timed runs, throughput = input rows / median wall-clock).
@@ -77,7 +78,8 @@ object BenchCore {
 
 /** Driver-run benchmark: one JSON line with per-query seconds on
   * SPARK_GRAFT_SF_DIR plus flagship join+tiling throughput at
-  * SPARK_GRAFT_CPUS cores on the seed-42 1M-row images table.
+  * SPARK_GRAFT_CPUS cores on the seed-42 1M-row images table. Exits 1,
+  * naming the failed queries, if any query threw.
   */
 object Bench {
   val FLAGSHIP_ROWS = 1000000L
@@ -96,28 +98,8 @@ object Bench {
     }
     val mRowsPerSec = totalRows / tFlag / 1e6
 
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      // median of 3 in-JVM runs per query: this VM's hypervisor steals up
-      // to ~31% of busy time in bad windows (BASELINE.md caveat), and a
-      // single-shot number read ~1.4x slow across the whole round-3 suite
-      // through no plan fault — one stolen window can inflate at most one
-      // of the three runs, and the median discards it
-      val ts = (1 to 3).map { _ =>
-        val t = BenchCore.timed {
-          try fn(spark, sfDir).count() catch { case _: Throwable => () }
-        }
-        // isolation between sequential runs sharing one JVM: a full GC
-        // lets the ContextCleaner drop finished broadcasts /
-        // localCheckpoint blocks NOW instead of mid-way through the next
-        // timed query — without it, later queries absorb earlier queries'
-        // cleanup (the heavier round-3 ANN/verify queries inflated
-        // untouched queries by 30-90% in-suite while fresh-JVM isolation
-        // showed no regression)
-        System.gc()
-        t
-      }.sorted
-      name -> ts(1)
-    }
+    val (results, failed) =
+      timeQueries(spark, sfDir, QueryRegistry.all.queries.sortBy(_.name))
     val qs = (results :+ ("flagship_join_tiles_16m" -> tFlag))
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
     val total = results.map(_._2).sum + tFlag
@@ -127,6 +109,44 @@ object Bench {
       else 0.0
     println(s"""{"metric":"flagship join+tiling throughput","value":${f"$mRowsPerSec%.3f"},"unit":"Mrows/s","total_sec":${f"$total%.3f"},"host_steal_pct":${f"$stealPct%.1f"},"queries":$qs,"cpus":"$cpus","sf":"$sfDir"}""")
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[bench] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Median of 3 in-JVM `count()` runs per query. A query that throws is
+    * not timed: it is named in the second result and left out of the
+    * first, so it can never read as a fast query.
+    */
+  def timeQueries(spark: SparkSession, sfDir: String,
+                  qs: Seq[Query]): (Seq[(String, Double)], Seq[String]) = {
+    val failed = Seq.newBuilder[String]
+    val timed = qs.flatMap { q =>
+      // median of 3: this VM's hypervisor steals up to ~31% of busy time
+      // in bad windows (BASELINE.md caveat), and a single-shot number read
+      // ~1.4x slow across the whole round-3 suite through no plan fault —
+      // one stolen window can inflate at most one of the three runs
+      try {
+        val ts = (1 to 3).map { _ =>
+          val t = BenchCore.timed { q.plan(spark, sfDir).count() }
+          // isolation between sequential runs sharing one JVM: a full GC
+          // lets the ContextCleaner drop finished broadcasts /
+          // localCheckpoint blocks NOW instead of mid-way through the next
+          // timed query (the heavier round-3 ANN/verify queries inflated
+          // untouched queries by 30-90% in-suite without it)
+          System.gc()
+          t
+        }.sorted
+        Some(q.name -> ts(1))
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
+        failed += q.name
+        None
+      }
+    }
+    (timed, failed.result())
   }
 }
 

@@ -48,7 +48,7 @@ object Verify {
       }
       // same isolation as Bench: a full GC lets the ContextCleaner drop
       // finished broadcasts / localCheckpoint blocks between queries —
-      // 95 queries share this JVM, and accumulated pins measurably
+      // all 196 queries share this JVM, and accumulated pins measurably
       // degrade later stages (BENCH/BASELINE.md round 4)
       System.gc()
     }

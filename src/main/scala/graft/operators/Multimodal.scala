@@ -271,6 +271,7 @@ object Multimodal {
         it.map { r =>
           val (id, bytes, w, h, fmt) = (r.getString(0), r.getAs[Array[Byte]](1),
             r.getInt(2), r.getInt(3), r.getString(4))
+          require(w >= 8 && h >= 8, s"dims ${w}x$h under the 8x8 pooling grid")
           val px = decodeAny(bytes, fmt, w, h)
           val bw = w / 8; val bh = h / 8
           val emb = new Array[Double](64)
@@ -482,6 +483,7 @@ object Multimodal {
         it.map { r =>
           val (bytes, w, h, fmt) = (r.getAs[Array[Byte]](0),
             r.getInt(1), r.getInt(2), r.getString(3))
+          require(w >= 8 && h >= 8, s"dims ${w}x$h under the 8x8 pooling grid")
           val px = decodeAny(bytes, fmt, w, h)
           java.util.Arrays.fill(sums, 0L)
           val bw = w / 8; val bh = h / 8

@@ -404,6 +404,16 @@ class MultimodalSpec extends AnyFunSuite {
     assert(gotBright === expect, "uniform brightness shift must not flip dHash bits")
   }
 
+  test("features and dHash reject an image under 8 px by name, not by a divide or a NaN") {
+    import spark.implicits._
+    val tiny = Seq(("img7", Array.fill(7 * 7)(77.toByte), 7, 7, "raw"))
+      .toDF("image_id", "bytes", "w", "h", "fmt")
+    val ef = intercept[Exception] { Multimodal.features(tiny).collect() }
+    assert(ef.getMessage.contains("dims 7x7 under the 8x8 pooling grid"))
+    val ed = intercept[Exception] { Multimodal.dHash(tiny).collect() }
+    assert(ed.getMessage.contains("dims 7x7 under the 8x8 pooling grid"))
+  }
+
   test("lumaHistogram: kernel matches brute per-pixel histogram and the popcount rule across formats") {
     import spark.implicits._
     val rows = Seq(
